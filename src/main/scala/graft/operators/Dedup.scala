@@ -658,8 +658,10 @@ object Dedup {
   def keepByPriority(labels: DataFrame, docs: DataFrame, idCol: String,
                      priority: Column): DataFrame = {
     val Big = 1073741824L // 2^30
+    // drop the docs' id by reference: by name it would also drop the
+    // labels' `id` when the docs' column is named `id` too
     val withP = labels.join(docs, labels("id") === docs(idCol))
-      .drop(idCol)
+      .drop(docs(idCol))
       .withColumn("_prio", priority.cast("long"))
     val best = withP.groupBy("comp")
       .agg(max(col("_prio") * Big + (lit(Big - 1) - col("id"))).as("_bk"))

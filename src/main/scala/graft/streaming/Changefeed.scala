@@ -235,15 +235,20 @@ object Changefeed {
         // Compaction keys on the ROUTED identity: after shard-merge several
         // source tables share one target, and net effects must fold across
         // them (dm shard-merge semantics). Renamed back so sinks see the
-        // canonical envelope names.
-        val b =
-          if (spec.compact)
-            Compaction.compact(data,
-                keyCols = Seq("target_schema", "target_table", "pk"))
-              .withColumnRenamed("target_schema", "schema_name")
-              .withColumnRenamed("target_table", "table_name")
-          else data
-        effectiveSink(b, batchId)
+        // canonical envelope names. The compacted batch is persisted for
+        // the batch's duration: the DML counters and the state sink's
+        // bucket, key and upsert sides all read it, and each would
+        // otherwise re-run the source scan, update split and compaction
+        // shuffle. The uncompacted path is not persisted: its append sinks
+        // read the batch once or twice, and a cache build costs a job.
+        if (spec.compact) {
+          val b = Compaction.compact(data,
+              keyCols = Seq("target_schema", "target_table", "pk"))
+            .withColumnRenamed("target_schema", "schema_name")
+            .withColumnRenamed("target_table", "table_name")
+            .persist()
+          try effectiveSink(b, batchId) finally b.unpersist()
+        } else effectiveSink(data, batchId)
       }
       .trigger(Trigger.AvailableNow())
       .start()

@@ -29,7 +29,8 @@ object Metrics {
         .agg(count(lit(1)).as("n_rows"))
         .withColumn("batch_id", lit(batchId))
         .withColumn("recorded_at", current_timestamp())
-      counters.write.mode(SaveMode.Append).parquet(metricsDir)
+      // a few rows per batch: one file, not one per shuffle partition
+      counters.coalesce(1).write.mode(SaveMode.Append).parquet(metricsDir)
       sink(batch, batchId)
   }
 

@@ -148,10 +148,13 @@ object Sinks {
     x.delete(); ()
   }
 
-  /** Bucket dirs holding at least one parquet file (a bucket whose keys
-    * were all deleted leaves an empty version dir). */
-  private def liveBucketPaths(stateDir: String, p: StatePointer): Seq[String] =
-    p.versions.toSeq.sorted.map { case (b, v) => s"$stateDir/b$b/v$v" }
+  /** Dirs of the given bucket versions that hold at least one parquet
+    * file (a bucket whose keys were all deleted leaves an empty version
+    * dir). The one listing both the sink's merge side and [[readState]]
+    * use. */
+  private def liveBucketPaths(stateDir: String,
+      versions: Map[Int, Long]): Seq[String] =
+    versions.toSeq.sorted.map { case (b, v) => s"$stateDir/b$b/v$v" }
       .filter(d => Option(new java.io.File(d).listFiles())
         .exists(_.exists(_.getName.endsWith(".parquet"))))
 
@@ -160,10 +163,17 @@ object Sinks {
    * by key (delete on D, upsert otherwise). Production target is a format
    * with native MERGE (Delta/Iceberg — transactional, partition-pruned);
    * on plain parquet the state is HASH-BUCKETED by key and only the
-   * buckets a batch touches are re-merged and rewritten — per-batch I/O is
-   * O(touched buckets), not O(state), which is what survives a 100 TB
-   * materialized table. Each bucket is independently versioned; an atomic
-   * pointer swap publishes the batch.
+   * buckets a batch touches are re-merged and rewritten, each as one new
+   * file. Per-batch I/O is O(touched buckets): a batch of n distinct keys
+   * touches about nb·(1−e^(−n/nb)) of the nb buckets, so a small batch
+   * rewrites a small share of the state, but a batch with at least nb
+   * distinct keys touches nearly every bucket and its rewrite is
+   * O(state). Each bucket is independently versioned; an atomic pointer
+   * swap publishes the batch.
+   *
+   * The batch is read three times (touched buckets, the anti-join key
+   * side, the upserts): callers pass a persisted batch when it is costly
+   * to recompute ([[Changefeed.start]] persists its compacted batches).
    */
   def parquetStateSink(spark: SparkSession, stateDir: String,
                        keyCols: Seq[String] = Seq("schema_name", "table_name", "pk"),
@@ -187,24 +197,27 @@ object Sinks {
     val upserts = keyed.filter(col("net_op") =!= "D")
       .select(keyCols.map(col) ++ Seq(col("final_val"), col("last_commit_ts"),
         col("_bucket")): _*)
-    val existing = touched.toSeq.flatMap(b => versions.get(b).map(v => s"$stateDir/b$b/v$v"))
-      .filter(d => Option(new java.io.File(d).listFiles())
-        .exists(_.exists(_.getName.endsWith(".parquet"))))
+    val existing = liveBucketPaths(stateDir,
+      versions.filter { case (b, _) => touched.contains(b) })
     val merged =
       if (existing.isEmpty) upserts
       else {
-        // read ONLY the touched buckets' live state; anti-join removes keys
+        // read ONLY the touched buckets' live state, with the schema this
+        // sink writes (no footer-inference job); anti-join removes keys
         // replaced or deleted this batch, then the new images are appended
-        spark.read.parquet(existing: _*)
+        spark.read.schema(upserts.drop("_bucket").schema).parquet(existing: _*)
           .join(batch.select(keyCols.map(col): _*), keyCols, "left_anti")
           .withColumn("_bucket", bucketOf)
           .unionByName(upserts)
       }
     // stage partitioned by bucket, then publish each touched bucket as its
     // next version (staging is a sibling dir: the merge reads the current
-    // versions lazily, so writing in place would destroy its own input)
+    // versions lazily, so writing in place would destroy its own input).
+    // Clustering by bucket first makes each bucket version one file, at
+    // any shuffle-partition count.
     val staging = s"$stateDir/.staging"
-    merged.write.mode(SaveMode.Overwrite).partitionBy("_bucket").parquet(staging)
+    merged.repartition(col("_bucket"))
+      .write.mode(SaveMode.Overwrite).partitionBy("_bucket").parquet(staging)
     val nextVersions = versions ++ touched.map { b =>
       val next = versions.getOrElse(b, -1L) + 1
       val dst = Paths.get(s"$stateDir/b$b/v$next")
@@ -223,7 +236,7 @@ object Sinks {
   def readState(spark: SparkSession, stateDir: String): DataFrame = {
     val p = readPointer(Paths.get(s"$stateDir/CURRENT"))
       .getOrElse(throw new IllegalStateException(s"no state at $stateDir"))
-    val paths = liveBucketPaths(stateDir, p)
+    val paths = liveBucketPaths(stateDir, p.versions)
     if (paths.isEmpty) spark.emptyDataFrame
     else spark.read.parquet(paths: _*)
   }

@@ -48,6 +48,46 @@ class BucketedStateSpec extends SparkSpec {
     assert(Sinks.readState(spark, s"$dir/state").count() === 5)
   }
 
+  test("each touched bucket version is one file at any shuffle-partition count") {
+    val conf = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(conf)
+    try for (parts <- Seq(1, 8)) {
+      spark.conf.set(conf, parts.toLong)
+      val dir = Files.createTempDirectory(s"bucket_state_files$parts").toString
+      val stateDir = s"$dir/state"
+      val rnd = new scala.util.Random(parts)
+      val expect = scala.collection.mutable.Map.empty[Long, Double]
+      for (batchId <- 0L until 4L) {
+        // batch 0 inserts 400 keys; later batches update ~150 of them and
+        // delete 3 (never a whole bucket's worth)
+        val ups = if (batchId == 0) 0L until 400L
+          else Seq.fill(150)(rnd.nextInt(400).toLong).distinct
+            .filter(expect.contains)
+        val dels = if (batchId == 0) Nil
+          else expect.keys.toSeq.sorted.filterNot(ups.contains).take(3)
+        val v = batchId + 1.0
+        val before = Sinks.stateVersions(stateDir)
+        Sinks.parquetStateSink(spark, stateDir)(
+          mkBatch(ups, v).unionByName(mkBatch(dels, 0.0, "D")), batchId)
+        ups.foreach(expect(_) = v)
+        dels.foreach(expect.remove)
+        val touched = Sinks.stateVersions(stateDir)
+          .filter { case (b, ver) => !before.get(b).contains(ver) }
+        assert(touched.nonEmpty)
+        touched.foreach { case (b, ver) =>
+          val files = new java.io.File(s"$stateDir/b$b/v$ver").listFiles()
+            .count(_.getName.endsWith(".parquet"))
+          assert(files === 1, s"partitions $parts batch $batchId bucket $b")
+        }
+        val got = Sinks.readState(spark, stateDir)
+          .select("pk", "final_val").collect()
+          .map(r => r.getLong(0) -> r.getDouble(1))
+        assert(got.length === expect.size)
+        assert(got.toMap === expect.toMap)
+      }
+    } finally spark.conf.set(conf, saved)
+  }
+
   test("vacuum keeps each bucket's live version") {
     val dir = Files.createTempDirectory("bucket_state3").toString
     for (b <- 0L to 4L)

@@ -150,6 +150,16 @@ class DedupCcSpec extends SparkSpec {
     assert(kept === Set(2L, 10L, 20L))
   }
 
+  test("priority keep: a docs id column named `id` keeps the labels' id") {
+    val labels = Seq((1L, 1L), (2L, 1L), (3L, 3L)).toDF("id", "comp")
+    val docs = Seq((1L, 0L), (2L, 1L), (3L, 0L)).toDF("id", "p")
+    val out = Dedup.keepByPriority(labels, docs, "id", col("p"))
+    assert(out.columns.count(_ == "id") === 1)
+    val kept = out.filter(col("kept") === 1).select("id").as[Long]
+      .collect().toSet
+    assert(kept === Set(2L, 3L))
+  }
+
   test("degenerate LSH bucket is capped: candidates stay linear") {
     // 1200 identical boilerplate docs (every band hashes them into ONE
     // bucket → an uncapped self-join would emit ~720k pairs) + 2 genuine

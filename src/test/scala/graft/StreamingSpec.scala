@@ -526,6 +526,41 @@ class StreamingSpec extends SparkSpec {
     assert(k.workers("w1").relaySource == "src-b")
   }
 
+  test("a compacted microbatch evaluates each source row once") {
+    // the DML counters and the state sink's bucket, key and upsert sides
+    // all read the compacted batch; without the per-batch persist each
+    // re-runs the source, update split and compaction
+    val dir = Files.createTempDirectory("graft_cf_once").toString
+    val spec = ChangefeedSpec(id = "cf-once", checkpointDir = s"$dir/ckpt",
+      metricsDir = Some(s"$dir/metrics"))
+    val evals = spark.sparkContext.longAccumulator("cf-once-evals")
+    val probe = udf { (s: Long) => evals.add(1); s }.asNondeterministic()
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[StreamEv]
+    // 30 inserts, then updates of keys 0..9 and deletes of keys 20..24
+    val evs = (1L to 30L).map(i => ev(i, "I", i - 1, i.toDouble)) ++
+      (31L to 40L).map(i => ev(i, "U", i - 31, i.toDouble)) ++
+      (41L to 45L).map(i => ev(i, "D", i - 21, 0))
+    mem.addData(evs: _*)
+    spark.catalog.clearCache()
+    val q = Changefeed.start(spark,
+      mem.toDF().withColumn("seq", probe(col("seq"))), spec)(
+      Sinks.forUri(spark, s"state://$dir/state"))
+    q.awaitTermination()
+    assert(q.exception.isEmpty)
+    assert(evals.value == evs.size,
+      s"${evals.value} row evaluations for ${evs.size} source rows")
+    assert(spark.sharedState.cacheManager.isEmpty)
+    val state = Sinks.readState(spark, s"$dir/state")
+      .select("pk", "final_val").as[(Long, Double)].collect().toMap
+    val expect = (0L until 30L).filterNot(k => k >= 20 && k < 25)
+      .map(k => k -> (if (k < 10) k + 31.0 else k + 1.0)).toMap
+    assert(state == expect)
+    assert(Metrics.totals(spark, s"$dir/metrics")
+      .select("op", "total_rows").as[(String, Long)].collect().toMap ==
+      Map("I" -> 25L))
+  }
+
   test("idempotent replay: re-applying a batch converges to same state") {
     val dir = Files.createTempDirectory("graft_cf3").toString
     val batch = Seq(
